@@ -1,6 +1,6 @@
 package graft.core
 
-import java.util.zip.Inflater
+import java.util.zip.{CRC32, Inflater}
 
 /** Minimal pure-JVM PNG scanline decoder for the engine's read paths —
   * non-interlaced, bit depth 8/16, color types 0 (gray), 2 (RGB) and
@@ -44,8 +44,12 @@ object PngDecode {
   }
 
   /** Decode to defiltered samples; None when the stream is outside the
-    * supported envelope or malformed (callers fall back to ImageIO,
-    * whose error reporting then applies).
+    * supported envelope or structurally malformed (callers fall back to
+    * ImageIO, whose error reporting then applies). A stream whose chunk
+    * CRC-32 or zlib adler32 trailer does not match, or whose deflate
+    * data is corrupt, throws IllegalArgumentException instead: ImageIO
+    * ignores chunk CRCs, so falling back would decode the corruption to
+    * pixels.
     */
   def decodeRaw(png: Array[Byte]): Option[Raw] = {
     if (png.length < 33) return None
@@ -56,10 +60,18 @@ object PngDecode {
     var seenIhdr = false
     val idat = new java.io.ByteArrayOutputStream(png.length)
     var done = false
+    val crc = new CRC32
     while (!done && pos + 8 <= png.length) {
       val len = be32(png, pos)
       val typ = be32(png, pos + 4)
       if (len < 0 || pos + 12 + len > png.length) return None
+      // CRC-32 over chunk type + data (RFC 2083 §3.2)
+      crc.reset()
+      crc.update(png, pos + 4, len + 4)
+      if (crc.getValue.toInt != be32(png, pos + 8 + len))
+        throw new IllegalArgumentException("corrupt png: CRC mismatch in " +
+          new String(png, pos + 4, 4, java.nio.charset.StandardCharsets.US_ASCII) +
+          s" chunk at byte $pos")
       typ match {
         case 0x49484452 => // IHDR
           if (len < 13) return None
@@ -84,7 +96,9 @@ object PngDecode {
     if (rowBytesL <= 0 || rawLenL > MaxRawBytes) return None
     val rowBytes = rowBytesL.toInt
     val bpp = ch * depth / 8
-    // one inflate straight into the right-sized filtered buffer
+    // one inflate straight into the right-sized filtered buffer, then
+    // drain to the end of the zlib stream: the Inflater checks the
+    // adler32 trailer only once it reaches it
     val raw = new Array[Byte](rawLenL.toInt)
     val inf = new Inflater()
     inf.setInput(idat.toByteArray)
@@ -95,10 +109,16 @@ object PngDecode {
         if (k == 0 && (inf.needsInput() || inf.needsDictionary())) return None
         off += k
       }
+      if (off != raw.length) return None
+      // the stream must end here: more image data than IHDR declares,
+      // or a stream cut before its trailer, is outside the envelope
+      if (!inf.finished() &&
+          (inf.inflate(new Array[Byte](1)) > 0 || !inf.finished())) return None
     } catch {
-      case _: java.util.zip.DataFormatException => return None
+      case e: java.util.zip.DataFormatException =>
+        throw new IllegalArgumentException(
+          s"corrupt png zlib stream: ${e.getMessage}", e)
     } finally inf.end()
-    if (off != raw.length) return None
     // defilter (filters 0-4 per row; the reconstruction reads the
     // already-reconstructed output row above/left, RFC 2083 §6)
     val out = new Array[Byte](rowBytes * h)

@@ -18,64 +18,72 @@ import graft.core.{Codec, Compresso, Cseg, Vec3}
   * ANY query that filters a cutout on label equality benefits without
   * opting in at the call site.
   *
-  * Matched shape (what the built-in optimizer leaves after pushing the
-  * user's filter through the x/y/z/label projection):
+  * Matched shape (what the built-in optimizer leaves once it has
+  * pushed the user's filter through the cutout's projection and
+  * dropped the pass-through Project):
   *
-  *   Filter (vx#N._4 = K [AND ...])
-  *   +- Generate explode(graft_decode_voxels:<enc>:<dtb>:<bs>(x0..z1, payload))
+  *   Filter (label#N = K [AND ...])
+  *   +- Generate graft_decode_voxels(x0..z1, payload; enc, dtb, ...)
   *      +- <chunk relation>
   *
   * rewritten to
   *
-  *   Filter (vx#N._4 = K [AND ...])
-  *   +- Generate explode(...)
+  *   Filter (label#N = K [AND ...])
+  *   +- Generate graft_decode_voxels(...)
   *      +- Filter graft_contains_gate(x0..z1, payload)
   *         +- <chunk relation>
+  *
+  * `label#N` is the [[DecodeVoxels]] generator's 4th output attribute;
+  * the conjunct may be `= K` (either operand order), `IN (...)` or its
+  * InSet form.
   *
   * Soundness: the upper filter keeps only rows with label = K; any
   * chunk producing such a row contains K and passes the gate, so the
   * rewrite never changes results (the gate only drops chunks whose
   * every decoded row the upper filter would discard). A null payload
-  * (fill_missing) decodes to zeros, so the gate passes it iff K = 0.
-  * The decode UDF's name carries the codec parameters (encoding, dtype
-  * bytes, cseg block size) that the gate needs; for cseg the gate
-  * reads only the palette blocks (Cseg.labels), for raw it scans
-  * words without materializing voxel rows. Encodings with no cheap
-  * membership probe (png/jpeg) are left untouched.
+  * (fill_missing) decodes to the generator's `background`, so the gate
+  * passes it iff K = background. The codec parameters the gate needs
+  * (encoding, dtype bytes, cseg block size, background) are typed
+  * fields of the generator node; for cseg the gate reads only the
+  * palette blocks (Cseg.labels), for raw it scans words without
+  * materializing voxel rows. Encodings with no cheap membership probe
+  * (png/jpeg/npz) and the float / multi-channel generators are left
+  * untouched.
   */
 object ContainsGateRule extends Rule[LogicalPlan] with PredicateHelper {
 
-  val DecodePrefix = "graft_decode_voxels:"
   val GateName = "graft_contains_gate"
+
+  private val GatedEncodings = Set("raw", "compressed_segmentation", "compresso")
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case f @ Filter(cond,
-        gen @ Generate(Explode(u: ScalaUDF), _, _, _, genOut, gchild))
-        if u.udfName.exists(_.startsWith(DecodePrefix)) &&
+        gen @ Generate(d: DecodeVoxels, _, _, _, genOut, gchild))
+        if d.value == VoxelValue.Label && GatedEncodings(d.enc) &&
           !alreadyGated(gchild) =>
-      labelSet(cond, genOut) match {
-        case Some(ks) =>
-          mkGate(u, ks)
-            .map(g => f.copy(child = gen.copy(child = Filter(g, gchild))))
-            .getOrElse(f)
-        case None => f
+      labelSet(cond, genOut(3)) match {
+        case Some(ks) if ks.nonEmpty =>
+          f.copy(child = gen.copy(child = Filter(mkGate(d, ks), gchild)))
+        case _ => f
       }
   }
 
   private def alreadyGated(p: LogicalPlan): Boolean = p match {
-    case Filter(g: ScalaUDF, _) => g.udfName.contains(GateName)
+    case Filter(c, _) => splitConjunctivePredicates(c).exists {
+      case g: ScalaUDF => g.udfName.contains(GateName)
+      case _ => false
+    }
     case _ => false
   }
 
-  /** Extract the label set from a membership conjunct over this
-    * Generate's output struct (ordinal 3 = label): `vx._4 = K`
-    * (either literal order), `vx._4 IN (...)`, or its InSet form.
+  /** Extract the label set from a membership conjunct over the
+    * generator's `label` attribute: `label = K` (either literal order),
+    * `label IN (...)`, or its InSet form.
     */
   private def labelSet(cond: Expression,
-      genOut: Seq[Attribute]): Option[Seq[Long]] = {
-    val vx = genOut.headOption.map(_.exprId)
+      label: Attribute): Option[Seq[Long]] = {
     def isLabel(e: Expression): Boolean = e match {
-      case GetStructField(a: AttributeReference, 3, _) => vx.contains(a.exprId)
+      case a: Attribute => a.exprId == label.exprId
       case _ => false
     }
     splitConjunctivePredicates(cond).collectFirst {
@@ -90,24 +98,13 @@ object ContainsGateRule extends Rule[LogicalPlan] with PredicateHelper {
     }
   }
 
-  /** Build the gate ScalaUDF over the SAME children as the decode UDF
+  /** Build the gate ScalaUDF over the SAME children as the generator
     * (x0, y0, z0, x1, y1, z1, payload): pass iff the payload contains
     * ANY of the sought labels.
     */
-  private def mkGate(u: ScalaUDF, ks: Seq[Long]): Option[Expression] = {
-    val parts = u.udfName.get.stripPrefix(DecodePrefix).split(":")
-    val enc = parts(0)
-    val dtb = parts(1).toInt
-    val bs = parts(2).split("_").map(_.toLong) match {
-      case Array(a, b, c) => Vec3(a, b, c)
-      case _ => return None
-    }
-    if (enc != "raw" && enc != "compressed_segmentation" && enc != "compresso")
-      return None
-    if (ks.isEmpty) return None
-    // a missing (null-payload) chunk reads back as all-background —
-    // the decode name's trailing field (absent on older names = 0)
-    val bg = if (parts.length > 3) parts(3).toLong else 0L
+  private def mkGate(d: DecodeVoxels, ks: Seq[Long]): Expression = {
+    val enc = d.enc; val dtb = d.dtb; val bs = d.csegBlock
+    val bg = d.background
     val karr = ks.toArray
     val fn = (x0: Long, y0: Long, z0: Long, x1: Long, y1: Long, z1: Long,
         p: Array[Byte]) =>
@@ -118,8 +115,8 @@ object ContainsGateRule extends Rule[LogicalPlan] with PredicateHelper {
       } else if (enc == "compresso")
         karr.exists(k => Compresso.contains(p, k))
       else karr.exists(k => Codec.rawContains(p, dtb, k))
-    Some(ScalaUDF(fn, BooleanType, u.children, Nil, None, Some(GateName),
-      false, true))
+    ScalaUDF(fn, BooleanType, d.children, Nil, None, Some(GateName),
+      false, true)
   }
 
   /** Idempotently install this rule on a session's experimental

@@ -1,0 +1,176 @@
+package graft.functions
+
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, SpecificInternalRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import graft.core.{Bbox, Codec, Compresso, Cseg, Vec3}
+
+/** What one emitted voxel row carries after (x, y, z). */
+sealed trait VoxelValue extends Serializable
+
+object VoxelValue {
+  /** `label: LONG` — integer layers; the shape ContainsGateRule gates. */
+  case object Label extends VoxelValue
+  /** `value: DOUBLE` — raw float32/float64 layers. */
+  case object Real extends VoxelValue
+  /** `(c: LONG, value: LONG)` per requested channel of an `nc`-channel
+    * chunk stored channel-slowest (planar F-order). */
+  final case class Channels(slice: Seq[Int], nc: Int) extends VoxelValue
+}
+
+/** Cutout decode + clip + row emission as one typed Catalyst generator.
+  *
+  * Children are a chunk row's `x0, y0, z0, x1, y1, z1, payload`; the
+  * codec parameters (`enc`, dtype bytes, cseg block size, the fill
+  * value for missing chunks) and the requested `bbox` are plain fields,
+  * so optimizer rules read them by type (ContainsGateRule) instead of
+  * parsing them back out of a name.
+  *
+  * `eval` decodes the chunk once into its primitive array, then returns
+  * a lazy iterator that walks the chunk ∩ bbox box in z/y/x order and
+  * writes each voxel into ONE reused `SpecificInternalRow`: no tuples,
+  * no boxed longs, no array-of-struct. Reuse is safe because
+  * GenerateExec runs an UnsafeProjection over every generated row
+  * before anything downstream sees it (a CodegenFallback generator is
+  * never inlined into whole-stage codegen).
+  *
+  * A decoded array shorter than the chunk's declared voxel count
+  * (truncated or mis-sized object) fails as an IllegalArgumentException
+  * naming the chunk; a longer one (channel-major multi-channel payload
+  * read as channel 0) is accepted.
+  */
+case class DecodeVoxels(children: Seq[Expression], enc: String, dtb: Int,
+    csegBlock: Vec3, background: Long, bbox: Bbox,
+    value: VoxelValue = VoxelValue.Label)
+    extends Generator with CodegenFallback {
+
+  require(children.length == 7,
+    s"graft_decode_voxels takes (x0, y0, z0, x1, y1, z1, payload), got ${children.length}")
+
+  override def prettyName: String = "graft_decode_voxels"
+
+  override def elementSchema: StructType = {
+    def f(n: String, t: org.apache.spark.sql.types.DataType) =
+      StructField(n, t, nullable = false)
+    val xyz = Seq(f("x", LongType), f("y", LongType), f("z", LongType))
+    StructType(xyz ++ (value match {
+      case VoxelValue.Label => Seq(f("label", LongType))
+      case VoxelValue.Real => Seq(f("value", DoubleType))
+      case _: VoxelValue.Channels => Seq(f("c", LongType), f("value", LongType))
+    }))
+  }
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    def long(i: Int) = children(i).eval(input).asInstanceOf[Long]
+    val x0 = long(0); val y0 = long(1); val z0 = long(2)
+    val x1 = long(3); val y1 = long(4); val z1 = long(5)
+    val lo = Vec3(math.max(x0, bbox.minpt.x), math.max(y0, bbox.minpt.y),
+      math.max(z0, bbox.minpt.z))
+    val hi = Vec3(math.min(x1, bbox.maxpt.x), math.min(y1, bbox.maxpt.y),
+      math.min(z1, bbox.maxpt.z))
+    if (lo.x >= hi.x || lo.y >= hi.y || lo.z >= hi.z) return Iterator.empty
+    val origin = Vec3(x0, y0, z0)
+    val size = Vec3(x1 - x0, y1 - y0, z1 - z0)
+    val payload = children(6).eval(input).asInstanceOf[Array[Byte]]
+    val plane = size.x * size.y * size.z
+    val need = value match {
+      case VoxelValue.Channels(_, nc) => plane * nc
+      case _ => plane
+    }
+    val (longs, reals) = value match {
+      case VoxelValue.Real => (null, if (payload == null)
+        Array.fill(need.toInt)(background.toDouble)
+        else Codec.decodeRawFloatsToDoubles(payload, dtb))
+      case _ => (decodeLongs(payload, size, need.toInt), null)
+    }
+    val decoded = if (longs != null) longs.length else reals.length
+    require(decoded >= need,
+      s"$prettyName: chunk [$x0,$y0,$z0..$x1,$y1,$z1] declares $need " +
+        s"voxels but payload decodes $decoded (truncated or mis-sized " +
+        "chunk object)")
+    val channels = value match {
+      case VoxelValue.Channels(slice, _) => slice.map(_.toLong).toArray
+      case _ => null
+    }
+    new ClipIterator(new SpecificInternalRow(elementSchema.map(_.dataType)),
+      origin, size, lo, hi, longs, reals, channels)
+  }
+
+  /** One chunk payload as longs, dispatching on the encoding; a null
+    * payload (fill_missing) reads as `n` background voxels. */
+  private def decodeLongs(payload: Array[Byte], size: Vec3, n: Int): Array[Long] =
+    if (payload == null) Array.fill(n)(background)
+    else enc match {
+      case "compressed_segmentation" => Cseg.decode(payload, size, csegBlock, dtb)
+      case "compresso" => Compresso.decode(payload)._2
+      case "png" => value match {
+        case VoxelValue.Channels(_, nc) => Codec.decodePngChannelsToLongs(payload, nc)
+        case _ if dtb == 2 => Codec.decodePng16(payload)
+        case _ => Codec.decodeRawToLongs(Codec.decodePng(payload), 1)
+      }
+      case "jpeg" => Codec.decodeJpegChannelsToLongs(payload)
+      case "npz" => Codec.decodeNpz(payload)._2
+      case _ => Codec.decodeRawToLongs(payload, dtb)
+    }
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): DecodeVoxels =
+    copy(children = newChildren)
+}
+
+/** Walks the clipped box [lo, hi) of a chunk whose first voxel is
+  * `origin` and whose extent is `size`, in z/y/x order, writing each
+  * voxel into the same `row`. Exactly one of `longs` / `reals` is set;
+  * with `channels` set, every voxel emits one (c, longs(i + plane * c))
+  * row per requested channel.
+  */
+private final class ClipIterator(row: SpecificInternalRow, origin: Vec3,
+    size: Vec3, lo: Vec3, hi: Vec3, longs: Array[Long],
+    reals: Array[Double], channels: Array[Long])
+    extends Iterator[InternalRow] {
+
+  private val sx = size.x
+  private val sy = size.y
+  private val plane = size.x * size.y * size.z
+  private val lox = lo.x
+  private val loy = lo.y
+  private val hix = hi.x
+  private val hiy = hi.y
+  private val hiz = hi.z
+  private var x = lo.x
+  private var y = lo.y
+  private var z = lo.z
+  private var ci = 0
+  // flat index of (origin.x, y, z): x-fastest F-order
+  private var base = rowBase()
+
+  private def rowBase(): Long =
+    sx * ((y - origin.y) + sy * (z - origin.z)) - origin.x
+
+  override def hasNext: Boolean = z < hiz
+
+  override def next(): InternalRow = {
+    if (z >= hiz) throw new NoSuchElementException("clip box exhausted")
+    val i = base + x
+    row.setLong(0, x); row.setLong(1, y); row.setLong(2, z)
+    if (reals != null) row.setDouble(3, reals(i.toInt))
+    else if (channels == null) row.setLong(3, longs(i.toInt))
+    else {
+      val c = channels(ci)
+      row.setLong(3, c)
+      row.setLong(4, longs((i + plane * c).toInt))
+      ci += 1
+    }
+    if (channels == null || ci == channels.length) {
+      ci = 0
+      x += 1
+      if (x == hix) {
+        x = lox; y += 1
+        if (y == hiy) { y = loy; z += 1 }
+        base = rowBase()
+      }
+    }
+    row
+  }
+}

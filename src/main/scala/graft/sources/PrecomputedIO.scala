@@ -2,8 +2,11 @@ package graft.sources
 
 import java.nio.file.{Files, Paths, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim
 import graft.core._
+import graft.functions.{DecodeVoxels, VoxelValue}
 
 /** Real Neuroglancer precomputed layer I/O on a filesystem.
   *
@@ -136,7 +139,7 @@ object PrecomputedIO {
 
   /** S4 cutout read: decode chunks intersecting `bbox` into clipped
     * voxel rows (x, y, z, label). Decode happens once per chunk in the
-    * scan projection; the voxel explosion is for oracle-checkability —
+    * DecodeVoxels generator; the voxel rows are for oracle-checkability —
     * production cutouts stay at chunk granularity (rx.py:239-379).
     */
   def cutoutVoxels(spark: SparkSession, layerDir: String, bbox: Bbox,
@@ -167,17 +170,24 @@ object PrecomputedIO {
         ((col("id") / (sz.x * sz.y)).cast("long") + clip.minpt.z).as("z"),
         lit(background).as("label"))
     }
-    val chunks = readChunks(spark, layerDir, mip, fillMissing)
+    decodeToVoxels(chunksOver(spark, layerDir, bbox, mip, fillMissing),
+      bbox, scale, meta.dtypeBytes, background)
+  }
+
+  /** The pruned scan every precomputed cutout decodes: chunk rows whose
+    * box overlaps `bbox` (the overlap filters push into the source as
+    * partition pruning). */
+  private def chunksOver(spark: SparkSession, layerDir: String, bbox: Bbox,
+      mip: Int, fillMissing: Boolean): DataFrame =
+    readChunks(spark, layerDir, mip, fillMissing)
       .filter(col("x1") > bbox.minpt.x && col("x0") < bbox.maxpt.x &&
         col("y1") > bbox.minpt.y && col("y0") < bbox.maxpt.y &&
         col("z1") > bbox.minpt.z && col("z0") < bbox.maxpt.z)
-    decodeToVoxels(chunks, bbox, scale, meta.dtypeBytes, background)
-  }
 
   /** S4 float-image cutout (float32/float64 raw layers — the
     * reference's float dtype support; fpzip-compressed float chunks
-    * are n/a with the other C++ codecs). Same pruned scan + clip loop
-    * as the integer path, but voxels decode as IEEE doubles and the
+    * are n/a with the other C++ codecs). Same pruned scan + clip
+    * iterator as the integer path, but voxels decode as IEEE doubles and the
     * value column is DOUBLE.
     *
     * @return voxel rows (x, y, z, value: double)
@@ -190,43 +200,9 @@ object PrecomputedIO {
       s"${meta.dataType} layer — use cutoutVoxels")
     require(scale.encoding == "raw",
       s"float cutout reads raw encoding, not ${scale.encoding}")
-    val dtb = meta.dtypeBytes
-    val chunks = readChunks(spark, layerDir, mip, fillMissing)
-      .filter(col("x1") > bbox.minpt.x && col("x0") < bbox.maxpt.x &&
-        col("y1") > bbox.minpt.y && col("y0") < bbox.maxpt.y &&
-        col("z1") > bbox.minpt.z && col("z0") < bbox.maxpt.z)
-    val decodeUdf = udf((x0: Long, y0: Long, z0: Long, x1: Long, y1: Long,
-        z1: Long, payload: Array[Byte]) => {
-      val sx = x1 - x0; val sy = y1 - y0; val sz = z1 - z0
-      val vox =
-        if (payload == null) new Array[Double]((sx * sy * sz).toInt)
-        else Codec.decodeRawFloatsToDoubles(payload, dtb)
-      val out = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, Long, Long, Double)]
-      val lox = math.max(x0, bbox.minpt.x); val hix = math.min(x1, bbox.maxpt.x)
-      val loy = math.max(y0, bbox.minpt.y); val hiy = math.min(y1, bbox.maxpt.y)
-      val loz = math.max(z0, bbox.minpt.z); val hiz = math.min(z1, bbox.maxpt.z)
-      var z = loz
-      while (z < hiz) {
-        var y = loy
-        while (y < hiy) {
-          var x = lox
-          while (x < hix) {
-            val i = (x - x0) + sx * ((y - y0) + sy * (z - z0))
-            out += ((x, y, z, vox(i.toInt)))
-            x += 1
-          }
-          y += 1
-        }
-        z += 1
-      }
-      out.toSeq
-    })
-    chunks
-      .select(explode(decodeUdf(col("x0"), col("y0"), col("z0"),
-        col("x1"), col("y1"), col("z1"), col("payload"))).as("vx"))
-      .select(col("vx._1").as("x"), col("vx._2").as("y"),
-        col("vx._3").as("z"), col("vx._4").as("value"))
+    emit(chunksOver(spark, layerDir, bbox, mip, fillMissing),
+      DecodeVoxels(chunkCols, scale.encoding, meta.dtypeBytes, DefaultCsegBlock,
+        0L, bbox, VoxelValue.Real))
   }
 
   /** P2/S4 multi-channel cutout: chunk payloads hold all channels in
@@ -236,7 +212,7 @@ object PrecomputedIO {
     * `channels` is the reified channel slice of the reference's 4-D
     * __getitem__ (frontends/precomputed.py:582-588 channel_slice):
     * only requested channels become rows, so the selection prunes
-    * inside the decode rather than after the explode.
+    * inside the decode rather than after row emission.
     *
     * @return voxel rows (x, y, z, c, value)
     */
@@ -260,107 +236,38 @@ object PrecomputedIO {
       s"jpeg multi-channel requires 3 channels, got $nc")
     require(channels.nonEmpty && channels.forall(c => c >= 0 && c < nc),
       s"channel slice $channels out of range for $nc channels")
-    val chans = channels.toArray
-    val chunks = readChunks(spark, layerDir, mip, fillMissing)
-      .filter(col("x1") > bbox.minpt.x && col("x0") < bbox.maxpt.x &&
-        col("y1") > bbox.minpt.y && col("y0") < bbox.maxpt.y &&
-        col("z1") > bbox.minpt.z && col("z0") < bbox.maxpt.z)
-    val decodeUdf = udf((x0: Long, y0: Long, z0: Long, x1: Long, y1: Long,
-        z1: Long, payload: Array[Byte]) => {
-      val sx = x1 - x0; val sy = y1 - y0; val sz = z1 - z0
-      val plane = (sx * sy * sz).toInt
-      val vox =
-        if (payload == null) new Array[Long](plane * nc)
-        else if (isPng) Codec.decodePngChannelsToLongs(payload, nc)
-        else if (isJpeg) Codec.decodeJpegChannelsToLongs(payload)
-        else Codec.decodeRawToLongs(payload, dtb)
-      val out = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, Long, Long, Long, Long)]
-      val lox = math.max(x0, bbox.minpt.x); val hix = math.min(x1, bbox.maxpt.x)
-      val loy = math.max(y0, bbox.minpt.y); val hiy = math.min(y1, bbox.maxpt.y)
-      val loz = math.max(z0, bbox.minpt.z); val hiz = math.min(z1, bbox.maxpt.z)
-      var z = loz
-      while (z < hiz) {
-        var y = loy
-        while (y < hiy) {
-          var x = lox
-          while (x < hix) {
-            val i = ((x - x0) + sx * ((y - y0) + sy * (z - z0))).toInt
-            var ci = 0
-            while (ci < chans.length) {
-              out += ((x, y, z, chans(ci).toLong, vox(i + plane * chans(ci))))
-              ci += 1
-            }
-            x += 1
-          }
-          y += 1
-        }
-        z += 1
-      }
-      out.toSeq
-    })
-    chunks
-      .select(explode(decodeUdf(col("x0"), col("y0"), col("z0"),
-        col("x1"), col("y1"), col("z1"), col("payload"))).as("vx"))
-      .select(col("vx._1").as("x"), col("vx._2").as("y"),
-        col("vx._3").as("z"), col("vx._4").as("c"),
-        col("vx._5").as("value"))
+    emit(chunksOver(spark, layerDir, bbox, mip, fillMissing),
+      DecodeVoxels(chunkCols, scale.encoding, dtb, DefaultCsegBlock, 0L, bbox,
+        VoxelValue.Channels(channels, nc)))
   }
 
   /** Shared decode stage: chunk rows (x0..z1, payload) -> voxel rows
-    * clipped to `bbox`, dispatching on the scale's encoding.
+    * (x, y, z, label) clipped to `bbox`, dispatching on the scale's
+    * encoding inside the typed [[graft.functions.DecodeVoxels]]
+    * generator: each chunk decodes once into its primitive array and
+    * its clipped voxels stream out as rows without boxing. The codec
+    * parameters live on the generator node, where
+    * [[graft.functions.ContainsGateRule]] reads them to put a
+    * payload-level contains() gate below label-equality filters.
     * `background` is the fill value for missing (null-payload) chunks —
     * the reference's background_color option (image/rx.py background
-    * buffers; test_cloudvolume.py:85-140), default 0.
+    * buffers; test_cloudvolume.py:85-140), default 0. A decoded chunk
+    * shorter than its declared voxel count fails as an
+    * IllegalArgumentException naming the chunk.
     */
   def decodeToVoxels(chunks: DataFrame, bbox: Bbox, scale: ScaleMeta,
-      dtb: Int, background: Long = 0L): DataFrame = {
-    val enc = scale.encoding
-    val csegBs = scale.csegBlockSize.getOrElse(Vec3(8, 8, 8))
-    val bg = background
-    // the UDF name carries the codec parameters so the ContainsGateRule
-    // optimizer rule can synthesize a payload-level contains() gate
-    // for label-equality filters above this decode (see
-    // graft.functions.ContainsGateRule); the trailing field is the
-    // background value the gate must credit to null payloads
-    val decodeUdf = udf((x0: Long, y0: Long, z0: Long, x1: Long, y1: Long,
-        z1: Long, payload: Array[Byte]) => {
-      val sx = x1 - x0; val sy = y1 - y0; val sz = z1 - z0
-      val vox =
-        if (payload == null) Array.fill((sx * sy * sz).toInt)(bg)
-        else if (enc == "compressed_segmentation")
-          Cseg.decode(payload, Vec3(sx, sy, sz), csegBs, dtb)
-        else if (enc == "compresso") Compresso.decode(payload)._2
-        else if (enc == "png" && dtb == 2) Codec.decodePng16(payload)
-        else if (enc == "png")
-          Codec.decodeRawToLongs(Codec.decodePng(payload), 1)
-        else if (enc == "npz") Codec.decodeNpz(payload)._2
-        else Codec.decodeRawToLongs(payload, dtb)
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-      val lox = math.max(x0, bbox.minpt.x); val hix = math.min(x1, bbox.maxpt.x)
-      val loy = math.max(y0, bbox.minpt.y); val hiy = math.min(y1, bbox.maxpt.y)
-      val loz = math.max(z0, bbox.minpt.z); val hiz = math.min(z1, bbox.maxpt.z)
-      var z = loz
-      while (z < hiz) {
-        var y = loy
-        while (y < hiy) {
-          var x = lox
-          while (x < hix) {
-            val i = (x - x0) + sx * ((y - y0) + sy * (z - z0))
-            out += ((x, y, z, vox(i.toInt)))
-            x += 1
-          }
-          y += 1
-        }
-        z += 1
-      }
-      out.toSeq
-    }).withName(s"graft_decode_voxels:$enc:$dtb:" +
-      s"${csegBs.x}_${csegBs.y}_${csegBs.z}:$bg")
-    chunks
-      .select(explode(decodeUdf(col("x0"), col("y0"), col("z0"),
-        col("x1"), col("y1"), col("z1"), col("payload"))).as("vx"))
-      .select(col("vx._1").as("x"), col("vx._2").as("y"),
-        col("vx._3").as("z"), col("vx._4").as("label"))
-  }
+      dtb: Int, background: Long = 0L): DataFrame =
+    emit(chunks, DecodeVoxels(chunkCols, scale.encoding, dtb,
+      scale.csegBlockSize.getOrElse(DefaultCsegBlock), background, bbox))
+
+  private val DefaultCsegBlock = Vec3(8, 8, 8)
+
+  /** The chunk-row columns a DecodeVoxels generator reads, in order. */
+  private def chunkCols: Seq[Expression] =
+    Seq("x0", "y0", "z0", "x1", "y1", "z1", "payload")
+      .map(c => ColumnShim.expression(col(c)))
+
+  /** Select only the generator's output: one row per clipped voxel. */
+  private def emit(chunks: DataFrame, gen: DecodeVoxels): DataFrame =
+    chunks.select(ColumnShim.column(gen))
 }

@@ -405,6 +405,40 @@ class HostileDecodeSpec extends AnyFunSuite with BeforeAndAfterAll {
       fn(0, 0, 0, 4, 4, 4, new Array[Byte](12), 0, 0, 0, 4, 4, 4))
   }
 
+  test("precomputed cutout: a 4-byte-aligned truncated uint32 raw chunk " +
+      "fails typed, naming the chunk") {
+    // 12 bytes pass decodeRawToLongs' % dtypeBytes check but hold 3 of
+    // the chunk's 64 voxels: the generator's length rail must stop it
+    // before any voxel index runs past the decoded array
+    val spark = SparkSession.builder().master("local[2]")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    try {
+      val dir = Files.createTempDirectory("graft_hostile_raw")
+        .resolve("layer").toString
+      val scale = ScaleMeta(key = "1_1_1", encoding = "raw",
+        resolution = Seq(1, 1, 1), chunkSize = Vec3(4, 4, 4),
+        size = Vec3(4, 4, 4), voxelOffset = Vec3(0, 0, 0))
+      graft.sources.PrecomputedIO.writeInfo(dir, VolumeMeta(
+        layerType = "segmentation", dataType = "uint32", numChannels = 1,
+        scales = Seq(scale)))
+      Files.createDirectories(Paths.get(dir, scale.key))
+      Files.write(graft.sources.PrecomputedIO.chunkPath(dir, scale,
+        Vec3(0, 0, 0)), new Array[Byte](12))
+      val e = intercept[Exception] {
+        graft.sources.PrecomputedIO.cutoutVoxels(spark, dir,
+          Bbox(Vec3(1, 1, 1), Vec3(4, 4, 4))).collect()
+      }
+      def causes(t: Throwable): Seq[Throwable] =
+        if (t == null) Seq.empty else t +: causes(t.getCause)
+      val iae = causes(e).collectFirst { case i: IllegalArgumentException => i }
+      assert(iae.exists(_.getMessage.contains("chunk [0,0,0..4,4,4]")),
+        s"expected an IllegalArgumentException naming the chunk, got $e")
+      assert(!causes(e).exists(_.isInstanceOf[IndexOutOfBoundsException]), e)
+    } finally spark.stop()
+  }
+
   test("zarr3 shard: index offset near 2^63 cannot wrap the range rail") {
     import graft.sources.Zarr3IO
     val m = Zarr3IO.Zarr3Meta(

@@ -152,4 +152,56 @@ class PngDecodeSpec extends AnyFunSuite {
       assert(round.sameElements(planar.map(_ & 0xffL)), s"channels nc=$nc")
     }
   }
+
+  /** Rewrite chunk `typ`'s CRC-32 so it matches its (mutated) data. */
+  private def fixCrc(png: Array[Byte], typ: String): Unit = {
+    var pos = 8
+    while (new String(png, pos + 4, 4, "US-ASCII") != typ)
+      pos += 12 + java.nio.ByteBuffer.wrap(png, pos, 4).getInt
+    val len = java.nio.ByteBuffer.wrap(png, pos, 4).getInt
+    val crc = new java.util.zip.CRC32
+    crc.update(png, pos + 4, len + 4)
+    java.nio.ByteBuffer.wrap(png).putInt(pos + 8 + len, crc.getValue.toInt)
+  }
+
+  private def idatEnd(png: Array[Byte]): Int = {
+    var pos = 8
+    while (new String(png, pos + 4, 4, "US-ASCII") != "IDAT")
+      pos += 12 + java.nio.ByteBuffer.wrap(png, pos, 4).getInt
+    pos + 8 + java.nio.ByteBuffer.wrap(png, pos, 4).getInt
+  }
+
+  test("a stream that inflates to the right length but fails its CRC or " +
+      "adler32 never decodes to pixels") {
+    val vox = rnd(11, 25 * 17)
+    val ok = Codec.encodePng(vox, 25)
+    assert(java.util.Arrays.equals(PngDecode.gray8(ok).get._3, vox))
+    // (a) one flipped bit in the IDAT CRC field: the data are intact
+    val badCrc = ok.clone()
+    badCrc(idatEnd(ok)) = (badCrc(idatEnd(ok)) ^ 1).toByte
+    // (b) a wrong zlib adler32 trailer (last 4 IDAT data bytes) under a
+    // re-computed, valid chunk CRC: every scanline inflates unchanged
+    val badAdler = ok.clone()
+    badAdler(idatEnd(ok) - 1) = (badAdler(idatEnd(ok) - 1) ^ 0x5a).toByte
+    fixCrc(badAdler, "IDAT")
+    // ImageIO ignores chunk CRCs (it returns the pixels of the bad-CRC
+    // stream), so the fast path must refuse rather than fall back
+    val viaImageIO = javax.imageio.ImageIO.read(
+      new java.io.ByteArrayInputStream(badCrc))
+    assert(viaImageIO != null)
+    for ((what, png) <- Seq("CRC" -> badCrc, "adler32" -> badAdler)) {
+      intercept[IllegalArgumentException](PngDecode.gray8(png))
+      intercept[IllegalArgumentException](Codec.decodePng(png))
+      intercept[IllegalArgumentException](PngDecode.decodeRaw(png))
+      info(s"$what mismatch rejected")
+    }
+    // the same holds for 16-bit and multi-channel entry points
+    val p16 = Codec.encodePng16(Array.tabulate(64)(_.toLong * 999), 8)
+    p16(idatEnd(p16)) = (p16(idatEnd(p16)) ^ 1).toByte
+    intercept[IllegalArgumentException](Codec.decodePng16(p16))
+    val rgb = Codec.encodePngChannels(rnd(3, 8 * 8 * 3), 8, 3)
+    rgb(idatEnd(rgb) - 2) = (rgb(idatEnd(rgb) - 2) ^ 0x10).toByte
+    fixCrc(rgb, "IDAT")
+    intercept[IllegalArgumentException](Codec.decodePngChannelsToLongs(rgb, 3))
+  }
 }
