@@ -1,8 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, SpecificInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenFallback, UnsafeRowWriter}
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import graft.core.{Bbox, Codec, Compresso, Cseg, Vec3}
 
@@ -27,13 +27,19 @@ object VoxelValue {
   * so optimizer rules read them by type (ContainsGateRule) instead of
   * parsing them back out of a name.
   *
-  * `eval` decodes the chunk once into its primitive array, then returns
-  * a lazy iterator that walks the chunk ∩ bbox box in z/y/x order and
-  * writes each voxel into ONE reused `SpecificInternalRow`: no tuples,
-  * no boxed longs, no array-of-struct. Reuse is safe because
-  * GenerateExec runs an UnsafeProjection over every generated row
-  * before anything downstream sees it (a CodegenFallback generator is
-  * never inlined into whole-stage codegen).
+  * `clip` decodes the chunk once into its primitive array, then returns
+  * a [[ClipIterator]] that walks the chunk ∩ bbox box in z/y/x order
+  * and writes each voxel into ONE reused `UnsafeRow`: no tuples, no
+  * boxed longs, no array-of-struct, no per-row projection. Cutout plans
+  * run on [[DecodeVoxelsExec]] (planned by [[DecodeVoxelsStrategy]],
+  * which every cutout entry point installs), and the exec hands those rows
+  * straight to its consumer. Reuse is safe under Spark's physical-row
+  * contract, the one every scan and project output relies on: an
+  * operator that keeps a row past the next `next()` copies it first
+  * (sort and exchange serialize its bytes, cache builds column batches,
+  * collect writes the bytes out). On a session without the strategy,
+  * `eval` is the plain Generator contract and GenerateExec projects
+  * every row as usual.
   *
   * A decoded array shorter than the chunk's declared voxel count
   * (truncated or mis-sized object) fails as an IllegalArgumentException
@@ -62,6 +68,14 @@ case class DecodeVoxels(children: Seq[Expression], enc: String, dtb: Int,
   }
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val it = clip(input)
+    if (it == null) Iterator.empty else it
+  }
+
+  /** Decode the chunk in `input` and return the iterator over its voxels
+    * inside `bbox`, or null when the chunk misses the box (nothing is
+    * decoded then). */
+  def clip(input: InternalRow): ClipIterator = {
     def long(i: Int) = children(i).eval(input).asInstanceOf[Long]
     val x0 = long(0); val y0 = long(1); val z0 = long(2)
     val x1 = long(3); val y1 = long(4); val z1 = long(5)
@@ -69,7 +83,7 @@ case class DecodeVoxels(children: Seq[Expression], enc: String, dtb: Int,
       math.max(z0, bbox.minpt.z))
     val hi = Vec3(math.min(x1, bbox.maxpt.x), math.min(y1, bbox.maxpt.y),
       math.min(z1, bbox.maxpt.z))
-    if (lo.x >= hi.x || lo.y >= hi.y || lo.z >= hi.z) return Iterator.empty
+    if (lo.x >= hi.x || lo.y >= hi.y || lo.z >= hi.z) return null
     val origin = Vec3(x0, y0, z0)
     val size = Vec3(x1 - x0, y1 - y0, z1 - z0)
     val payload = children(6).eval(input).asInstanceOf[Array[Byte]]
@@ -93,8 +107,7 @@ case class DecodeVoxels(children: Seq[Expression], enc: String, dtb: Int,
       case VoxelValue.Channels(slice, _) => slice.map(_.toLong).toArray
       case _ => null
     }
-    new ClipIterator(new SpecificInternalRow(elementSchema.map(_.dataType)),
-      origin, size, lo, hi, longs, reals, channels)
+    new ClipIterator(origin, size, lo, hi, longs, reals, channels)
   }
 
   /** One chunk payload as longs, dispatching on the encoding; a null
@@ -121,15 +134,19 @@ case class DecodeVoxels(children: Seq[Expression], enc: String, dtb: Int,
 
 /** Walks the clipped box [lo, hi) of a chunk whose first voxel is
   * `origin` and whose extent is `size`, in z/y/x order, writing each
-  * voxel into the same `row`. Exactly one of `longs` / `reals` is set;
-  * with `channels` set, every voxel emits one (c, longs(i + plane * c))
-  * row per requested channel.
+  * voxel's fields straight into one reused `UnsafeRow` (every field is
+  * fixed-width and non-null, so nothing is ever re-laid out). Exactly
+  * one of `longs` / `reals` is set; with `channels` set, every voxel
+  * emits one (c, longs(i + plane * c)) row per requested channel.
   */
-private final class ClipIterator(row: SpecificInternalRow, origin: Vec3,
-    size: Vec3, lo: Vec3, hi: Vec3, longs: Array[Long],
-    reals: Array[Double], channels: Array[Long])
-    extends Iterator[InternalRow] {
+final class ClipIterator private[functions] (origin: Vec3, size: Vec3,
+    lo: Vec3, hi: Vec3, longs: Array[Long], reals: Array[Double],
+    channels: Array[Long]) extends Iterator[InternalRow] {
 
+  private val writer =
+    new UnsafeRowWriter(if (channels == null) 4 else 5)
+  writer.resetRowWriter()
+  private val row = writer.getRow
   private val sx = size.x
   private val sy = size.y
   private val plane = size.x * size.y * size.z
@@ -145,6 +162,10 @@ private final class ClipIterator(row: SpecificInternalRow, origin: Vec3,
   // flat index of (origin.x, y, z): x-fastest F-order
   private var base = rowBase()
 
+  /** Rows this iterator emits in total: clip volume x channels. */
+  val rows: Long = (hix - lox) * (hiy - loy) * (hiz - lo.z) *
+    (if (channels == null) 1 else channels.length)
+
   private def rowBase(): Long =
     sx * ((y - origin.y) + sy * (z - origin.z)) - origin.x
 
@@ -153,13 +174,13 @@ private final class ClipIterator(row: SpecificInternalRow, origin: Vec3,
   override def next(): InternalRow = {
     if (z >= hiz) throw new NoSuchElementException("clip box exhausted")
     val i = base + x
-    row.setLong(0, x); row.setLong(1, y); row.setLong(2, z)
-    if (reals != null) row.setDouble(3, reals(i.toInt))
-    else if (channels == null) row.setLong(3, longs(i.toInt))
+    writer.write(0, x); writer.write(1, y); writer.write(2, z)
+    if (reals != null) writer.write(3, reals(i.toInt))
+    else if (channels == null) writer.write(3, longs(i.toInt))
     else {
       val c = channels(ci)
-      row.setLong(3, c)
-      row.setLong(4, longs((i + plane * c).toInt))
+      writer.write(3, c)
+      writer.write(4, longs((i + plane * c).toInt))
       ci += 1
     }
     if (channels == null || ci == channels.length) {

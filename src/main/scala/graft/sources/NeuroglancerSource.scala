@@ -28,8 +28,10 @@ import graft.core._
   *  - **Column pruning** (SupportsPushDownRequiredColumns): when
   *    `payload` is not required (exists probes, grid listings) no
   *    chunk object is opened at all — pure metadata execution.
-  *  - Grid coordinates are evenly range-split across input partitions
-  *    so a 1000-executor scan load-balances without a shuffle.
+  *  - Grid coordinates are dealt round-robin across input partitions
+  *    (chunk i to partition i mod n), so a 1000-executor scan — and a
+  *    cutout whose per-chunk work varies by slab — load-balances
+  *    without a shuffle.
   *
   * Options: `mip` (default 0), `fill_missing` (default false — missing
   * chunk objects raise, per EmptyVolumeException rx.py:864-870; true
@@ -360,11 +362,15 @@ final class NgScan(layerDir: String, scale: ScaleMeta, dtypeBytes: Int,
     val nParts = ScanSizing.partitions(SparkSession.active, pts.size,
       scale.chunkSize.x * scale.chunkSize.y * scale.chunkSize.z * dtypeBytes)
     val b = scale.bounds
-    pts.grouped(Geom.ceilDiv(pts.size, nParts).toInt).map { group =>
-      NgInputPartition(layerDir, scale.key, group.toArray,
+    // chunk i goes to partition i mod nParts: a cutout's work per chunk
+    // follows its overlap with the box, which grid rows and z slabs
+    // share, so dealing the chunks round-robin spreads every slab over
+    // all tasks
+    Array.tabulate[InputPartition](nParts) { p =>
+      val dealt = (p until pts.size by nParts).map(pts).toArray
+      NgInputPartition(layerDir, scale.key, dealt,
         b.minpt.toArray, b.maxpt.toArray, scale.chunkSize.toArray)
-        : InputPartition
-    }.toArray
+    }
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnShim
 import graft.core._
-import graft.functions.{DecodeVoxels, VoxelValue}
+import graft.functions.{DecodeVoxels, DecodeVoxelsStrategy, VoxelValue}
 
 /** Real Neuroglancer precomputed layer I/O on a filesystem.
   *
@@ -162,9 +162,8 @@ object PrecomputedIO {
     }
     if (!inRoi) {
       val clip = bbox.intersection(scale.bounds)
-      import spark.implicits._
       val sz = clip.size
-      return spark.range(math.max(sz.x * sz.y * sz.z, 0L)).select(
+      return spark.range(clip.volume).select(
         (col("id") % sz.x + clip.minpt.x).as("x"),
         ((col("id") / sz.x).cast("long") % sz.y + clip.minpt.y).as("y"),
         ((col("id") / (sz.x * sz.y)).cast("long") + clip.minpt.z).as("z"),
@@ -267,7 +266,11 @@ object PrecomputedIO {
     Seq("x0", "y0", "z0", "x1", "y1", "z1", "payload")
       .map(c => ColumnShim.expression(col(c)))
 
-  /** Select only the generator's output: one row per clipped voxel. */
-  private def emit(chunks: DataFrame, gen: DecodeVoxels): DataFrame =
+  /** Select only the generator's output: one row per clipped voxel,
+    * planned onto DecodeVoxelsExec (the strategy is installed on the
+    * chunks' session, so plain sessions get the operator too). */
+  private def emit(chunks: DataFrame, gen: DecodeVoxels): DataFrame = {
+    DecodeVoxelsStrategy.install(chunks.sparkSession)
     chunks.select(ColumnShim.column(gen))
+  }
 }

@@ -2,10 +2,12 @@ package graft
 
 import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.core._
+import graft.functions.{DecodeVoxelsExec, DecodeVoxelsStrategy}
 import graft.sources.PrecomputedIO
 
 /** Differential spec for the DecodeVoxels cutout generator: for every
@@ -15,7 +17,9 @@ import graft.sources.PrecomputedIO
   * voxel offset; boxes are unaligned, reach past the volume, cover only
   * an edge chunk, or miss most chunks of an unpruned scan entirely.
   * Buffering consumers (sort, cache, union) pin that the generator's
-  * reused row is copied before anything holds it.
+  * reused row is copied before anything holds it. The cutouts run on
+  * DecodeVoxelsExec; a differential pins its rows to the GenerateExec
+  * fallback, and its SQL metrics to the rows it emitted.
   */
 class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -82,6 +86,9 @@ class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     Layer("npz", "uint32", "npz", 32,
       (v, s) => Codec.encodeNpz(v, s, 4), (p, _) => Codec.decodeNpz(p)._2))
 
+  private val f32 = raw("float32", 32, 4).copy(name = "float32")
+  private val rgb = raw("uint8", 8, 1).copy(name = "rgb")
+
   // missing chunk object of the fill_missing layer
   private val missingGrid = Vec3(1, 0, 1)
   private val missing = raw("uint32", 32, 4).copy(name = "missing_bg")
@@ -120,6 +127,10 @@ class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (l <- layers :+ missing)
       write(l)(cb => l.encode(chunkVoxels(cb, l.bits), cb.size))
     Files.delete(PrecomputedIO.chunkPath(missing.dir, missing.scale, missingGrid))
+    write(f32)(cb => Codec.encodeRawFloatsFromDoubles(
+      chunkVoxels(cb, 16).map(_ * 0.25 - 7.5), 4))
+    write(rgb, nc = 3)(cb => Codec.encodeRawFromLongs(
+      (0 until 3).toArray.flatMap(c => chunkVoxels(cb, 8, c)), 1))
   }
 
   override def afterAll(): Unit = { if (spark != null) spark.stop() }
@@ -187,12 +198,6 @@ class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("float and multi-channel cutouts share the clip iterator") {
-    val f32 = raw("float32", 32, 4).copy(name = "float32")
-    write(f32)(cb => Codec.encodeRawFloatsFromDoubles(
-      chunkVoxels(cb, 16).map(_ * 0.25 - 7.5), 4))
-    val rgb = raw("uint8", 8, 1).copy(name = "rgb")
-    write(rgb, nc = 3)(cb => Codec.encodeRawFromLongs(
-      (0 until 3).toArray.flatMap(c => chunkVoxels(cb, 8, c)), 1))
     val box = boxes(1)._2
     val inBox = for (x <- box.minpt.x until box.maxpt.x;
       y <- box.minpt.y until box.maxpt.y; z <- box.minpt.z until box.maxpt.z)
@@ -238,5 +243,94 @@ class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     assert(rows(df.union(df)) == (want ++ want).sorted)
     assert(df.union(df).distinct().count() == want.size)
+  }
+
+  private def decodeExecs(plan: SparkPlan): Seq[DecodeVoxelsExec] =
+    plan.collect { case e: DecodeVoxelsExec => e }
+
+  private def generates(plan: SparkPlan): Int =
+    plan.collect { case g: GenerateExec => g }.size
+
+  /** Run `f` with the decode strategy removed from the session's
+    * experimental strategies, then put them back. */
+  private def withoutStrategy[T](f: => T): T = {
+    val saved = spark.experimental.extraStrategies
+    spark.experimental.extraStrategies = saved.filterNot(_ == DecodeVoxelsStrategy)
+    try f finally spark.experimental.extraStrategies = saved
+  }
+
+  test("a plain session executes cutouts through DecodeVoxelsExec") {
+    // the suite's session has no extensions and never calls install:
+    // building the cutout installs the strategy
+    val l = layers.find(_.name == "cseg_u32").get
+    val df = PrecomputedIO.cutoutVoxels(spark, l.dir, boxes(1)._2)
+    val plan = df.queryExecution.executedPlan
+    assert(decodeExecs(plan).size == 1, plan)
+    assert(generates(plan) == 0, plan)
+    assert(rows(df) == clip(bruteForce(l), boxes(1)._2))
+  }
+
+  test("GenerateExec fallback returns the same rows for every encoding") {
+    def strings(df: DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    val cutouts: Seq[(String, Bbox => DataFrame)] =
+      layers.map(l => l.name -> ((b: Bbox) =>
+        PrecomputedIO.cutoutVoxels(spark, l.dir, b))) ++ Seq(
+        "missing_bg" -> ((b: Bbox) => PrecomputedIO.cutoutVoxels(spark,
+          missing.dir, b, fillMissing = true, background = Background)),
+        "float32" -> ((b: Bbox) => PrecomputedIO.cutoutVoxelsFloat(spark, f32.dir, b)),
+        "rgb channels" -> ((b: Bbox) =>
+          PrecomputedIO.cutoutVoxelsChannels(spark, rgb.dir, b, Seq(2, 0))))
+    for ((name, cutout) <- cutouts; (what, box) <- boxes) {
+      val viaExec = cutout(box)
+      val viaGenerate = cutout(box)
+      assert(decodeExecs(viaExec.queryExecution.executedPlan).size == 1)
+      val want = strings(viaExec)
+      assert(want.nonEmpty, s"$name / $what")
+      val got = withoutStrategy {
+        val plan = viaGenerate.queryExecution.executedPlan
+        assert(generates(plan) == 1 && decodeExecs(plan).isEmpty, plan)
+        strings(viaGenerate)
+      }
+      assert(got == want, s"$name / $what")
+    }
+  }
+
+  test("SQL metrics: output rows, chunks decoded and decode time") {
+    val l = layers.find(_.name == "cseg_u32").get
+    val box = boxes(1)._2
+    val df = PrecomputedIO.cutoutVoxels(spark, l.dir, box)
+    val n = df.collect().length
+    val m = decodeExecs(df.queryExecution.executedPlan).head.metrics
+    assert(n == box.intersection(bounds).volume)
+    assert(m("numOutputRows").value == n)
+    assert(m("numChunks").value ==
+      grid.count(g => Geom.chunkBbox(g, bounds, chunk).intersects(box)))
+    assert(m("decodeTime").value > 0)
+    // channels: one row per voxel and requested channel
+    val ch = PrecomputedIO.cutoutVoxelsChannels(spark, rgb.dir, box, Seq(2, 0))
+    assert(ch.collect().length == 2 * n)
+    assert(decodeExecs(ch.queryExecution.executedPlan).head
+      .metrics("numOutputRows").value == 2 * n)
+  }
+
+  test("an out-of-ROI box outside the volume on two axes returns no rows") {
+    // 16^3 raw layer with one ROI; the ROI short-circuit must size its
+    // background buffer by the clipped volume, not by a product in which
+    // two negative extents cancel
+    val dir = root.resolve("roi").toString
+    val scale = ScaleMeta(key = "1_1_1", encoding = "raw",
+      resolution = Seq(1, 1, 1), chunkSize = Vec3(8, 8, 8),
+      size = Vec3(16, 16, 16), voxelOffset = Vec3(0, 0, 0),
+      rois = Some(Seq(Bbox(Vec3(0, 0, 0), Vec3(4, 4, 4)))))
+    PrecomputedIO.writeInfo(dir, VolumeMeta(layerType = "segmentation",
+      dataType = "uint8", numChannels = 1, scales = Seq(scale)))
+    val outside = Bbox(Vec3(-100, -100, 0), Vec3(-50, -50, 10))
+    assert(PrecomputedIO.cutoutVoxels(spark, dir, outside).count() == 0)
+    // an in-volume box outside the ROI is still a background buffer
+    val bg = PrecomputedIO.cutoutVoxels(spark, dir,
+      Bbox(Vec3(8, 8, 8), Vec3(12, 12, 20)), background = 3L)
+    assert(rows(bg) == (for (x <- 8L until 12L; y <- 8L until 12L;
+      z <- 8L until 16L) yield (x, y, z, 3L)).sorted)
   }
 }

@@ -15,11 +15,12 @@ import graft.sources.PrecomputedIO
   * `cutout.filter(label === K)` to probe each encoded payload with a
   * codec contains() gate before the DecodeVoxels generator. Asserts
   * (a) results are byte-identical with the rule on and off, (b) the
-  * gate actually lands in the optimized plan and in EXPLAIN, below
-  * Generate, (c) a no-match label returns empty through the gated plan,
-  * (d) non-equality filters are untouched, (e) `=`, IN and InSet on the
-  * flat label column all gate, (f) a missing chunk is credited with the
-  * cutout's non-zero background, (g) the rule is idempotent.
+  * gate actually lands in the optimized plan below Generate and in
+  * EXPLAIN below DecodeVoxelsExec, (c) a no-match label returns empty
+  * through the gated plan, (d) non-equality filters are untouched,
+  * (e) `=`, IN and InSet on the flat label column all gate, (f) a
+  * missing chunk is credited with the cutout's non-zero background,
+  * (g) the rule is idempotent.
   */
 class GateRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -151,9 +152,9 @@ class GateRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     Console.withOut(out)(df.explain(extended = true))
     val physical = out.toString.linesIterator
       .dropWhile(!_.startsWith("== Physical Plan ==")).toSeq
-    val gen = physical.indexWhere(_.contains("Generate graft_decode_voxels"))
+    val gen = physical.indexWhere(_.contains("DecodeVoxelsExec graft_decode_voxels"))
     val gate = physical.indexWhere(_.contains(ContainsGateRule.GateName))
-    assert(gen > 0 && gate > gen, s"gate not below Generate:\n$out")
+    assert(gen > 0 && gate > gen, s"gate not below DecodeVoxelsExec:\n$out")
   }
 
   test("the rule is idempotent") {

@@ -420,4 +420,39 @@ class SourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // consolidated path didn't silently fall back to it
     intercept[Exception](Zarr3IO.readMeta(s"$g/1"))
   }
+
+  test("scan partitions deal chunks round-robin: every task gets every z slab") {
+    // 6 x 6 x 3 grid of 64 KiB chunks, info only: a keys-only scan
+    // opens no chunk object
+    val rr = s"$dir/round_robin"
+    val scale = ScaleMeta(key = "1_1_1", encoding = "raw",
+      resolution = Seq(1, 1, 1), chunkSize = Vec3(32, 32, 16),
+      size = Vec3(192, 192, 48), voxelOffset = Vec3(0, 0, 0))
+    PrecomputedIO.writeInfo(rr, VolumeMeta(layerType = "segmentation",
+      dataType = "uint32", numChannels = 1, scales = Seq(scale)))
+    def byPartition(df: org.apache.spark.sql.DataFrame) =
+      df.select(spark_partition_id(), col("gx"), col("gy"), col("gz"))
+        .collect().toSeq
+        .groupMap(_.getInt(0))(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
+
+    // pruned to a 5 x 5 x 2 window: 50 chunks over 4 tasks
+    val pruned = PrecomputedIO.readChunks(spark, rr).filter(
+      col("gx").between(1, 5) && col("gy").between(0, 4) && col("gz").between(1, 2))
+    assert(pruned.rdd.getNumPartitions == 4)
+    val parts = byPartition(pruned)
+    assert(parts.keySet == Set(0, 1, 2, 3))
+    val window = for (gz <- 1L to 2L; gy <- 0L to 4L; gx <- 1L to 5L)
+      yield (gx, gy, gz)
+    assert(parts.values.flatten.toSeq.sorted == window.sorted)
+    for ((p, pts) <- parts)
+      assert(pts.map(_._3).toSet == Set(1L, 2L), s"partition $p: $pts")
+
+    // the full volume keeps the contiguous split's count: 108 chunks,
+    // 4 tasks of 27
+    val full = PrecomputedIO.readChunks(spark, rr).select("gx", "gy", "gz")
+    assert(full.rdd.getNumPartitions == 4)
+    val fullParts = byPartition(full)
+    assert(fullParts.values.map(_.size).toSet == Set(27))
+    assert(fullParts.values.flatten.toSet.size == 6 * 6 * 3)
+  }
 }
