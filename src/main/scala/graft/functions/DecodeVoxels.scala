@@ -79,13 +79,9 @@ case class DecodeVoxels(children: Seq[Expression], enc: String, dtb: Int,
     def long(i: Int) = children(i).eval(input).asInstanceOf[Long]
     val x0 = long(0); val y0 = long(1); val z0 = long(2)
     val x1 = long(3); val y1 = long(4); val z1 = long(5)
-    val lo = Vec3(math.max(x0, bbox.minpt.x), math.max(y0, bbox.minpt.y),
-      math.max(z0, bbox.minpt.z))
-    val hi = Vec3(math.min(x1, bbox.maxpt.x), math.min(y1, bbox.maxpt.y),
-      math.min(z1, bbox.maxpt.z))
-    if (lo.x >= hi.x || lo.y >= hi.y || lo.z >= hi.z) return null
-    val origin = Vec3(x0, y0, z0)
-    val size = Vec3(x1 - x0, y1 - y0, z1 - z0)
+    val cell = Bbox(Vec3(x0, y0, z0), Vec3(x1, y1, z1))
+    if (!cell.intersects(bbox)) return null
+    val size = cell.size
     val payload = children(6).eval(input).asInstanceOf[Array[Byte]]
     val plane = size.x * size.y * size.z
     val need = value match {
@@ -107,7 +103,7 @@ case class DecodeVoxels(children: Seq[Expression], enc: String, dtb: Int,
       case VoxelValue.Channels(slice, _) => slice.map(_.toLong).toArray
       case _ => null
     }
-    new ClipIterator(origin, size, lo, hi, longs, reals, channels)
+    ClipIterator.of(cell, size, bbox, longs, reals, channels)
   }
 
   /** One chunk payload as longs, dispatching on the encoding; a null
@@ -138,8 +134,12 @@ case class DecodeVoxels(children: Seq[Expression], enc: String, dtb: Int,
   * fixed-width and non-null, so nothing is ever re-laid out). Exactly
   * one of `longs` / `reals` is set; with `channels` set, every voxel
   * emits one (c, longs(i + plane * c)) row per requested channel.
+  *
+  * Built through [[ClipIterator.of]] by its two callers: the
+  * precomputed cutout generator ([[DecodeVoxels.clip]]) and the
+  * Zarr2 / Zarr3 / N5 chunk-grid cutout (`graft.sources.ChunkGrid`).
   */
-final class ClipIterator private[functions] (origin: Vec3, size: Vec3,
+final class ClipIterator private (origin: Vec3, size: Vec3,
     lo: Vec3, hi: Vec3, longs: Array[Long], reals: Array[Double],
     channels: Array[Long]) extends Iterator[InternalRow] {
 
@@ -193,5 +193,21 @@ final class ClipIterator private[functions] (origin: Vec3, size: Vec3,
       }
     }
     row
+  }
+}
+
+object ClipIterator {
+  /** The rows of `cell` ∩ `bbox` of a decoded chunk whose voxels lie
+    * x-fastest from `cell.minpt` with extent `dims` (`dims` may exceed
+    * `cell.size` where a format pads its edge chunks), or null when
+    * the box misses the cell.
+    */
+  def of(cell: Bbox, dims: Vec3, bbox: Bbox, longs: Array[Long],
+      reals: Array[Double] = null, channels: Array[Long] = null)
+      : ClipIterator = {
+    val hit = cell.intersection(bbox)
+    if (hit.isEmpty) null
+    else new ClipIterator(cell.minpt, dims, hit.minpt, hit.maxpt, longs,
+      reals, channels)
   }
 }

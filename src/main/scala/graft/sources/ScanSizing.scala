@@ -71,9 +71,12 @@ object ScanSizing {
     val spool = Paths.get("/tmp/graft_fixture/.listings",
       spark.sparkContext.applicationId)
     Files.createDirectories(spool)
-    val f = spool.resolve(
-      java.lang.Long.toHexString(dir.toAbsolutePath.toString.hashCode
-        & 0xffffffffL) + ".txt")
+    // keyed on the SHA-256 of the absolute path: a 32-bit hash lets
+    // two directories ("Aa", "BB") share, and overwrite, one spool file
+    val f = spool.resolve(java.util.HexFormat.of().formatHex(
+      java.security.MessageDigest.getInstance("SHA-256").digest(
+        dir.toAbsolutePath.toString.getBytes(
+          java.nio.charset.StandardCharsets.UTF_8))) + ".txt")
     val tmp = spool.resolve(f.getFileName.toString + ".tmp")
     var n = 0L
     val w = Files.newBufferedWriter(tmp)
@@ -84,7 +87,8 @@ object ScanSizing {
         while (it.hasNext) {
           val p = it.next()
           val nm = p.getFileName.toString
-          if (keep(nm) && Files.isRegularFile(p)) {
+          // regular files only, tested first: `keep` may parse the name
+          if (Files.isRegularFile(p) && keep(nm)) {
             w.write(nm); w.newLine(); n += 1
           }
         }

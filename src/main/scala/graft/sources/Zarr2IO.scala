@@ -507,114 +507,50 @@ object Zarr2IO {
       case Some(nc) => require(c >= 0 && c < nc, s"c=$c out of [0, $nc)")
       case None => require(c == 0, s"$dir has no channel axis (c=$c)")
     }
-    val m = o.meta
-    val cs = m.chunkShape
-    val dtb = m.dtypeBytes
-    val meta = m
-    val sep = m.separator
     val lead =
       (if (o.timeFrames.isDefined) Seq(t.toString) else Seq.empty) ++
         (if (o.channels.isDefined) Seq(c.toString) else Seq.empty)
-    val bounds = Bbox(Vec3(0, 0, 0), m.shape)
-    val pts = Geom.gridpoints(bbox, bounds, cs)
-    val clip = bbox.intersection(bounds)
-    val dirStr = chunkBase
-    val fill = m.fillValue
-    // honor the .zarray dtype byte order like the non-OME cutout path
-    val be = m.byteOrder == java.nio.ByteOrder.BIG_ENDIAN
-    import spark.implicits._
-    spark.createDataset(pts.map(g => (g.x, g.y, g.z)))
-      // bytes-aware split sizing (guide §6; shared rule in ScanSizing)
-      .repartition(ScanSizing.partitions(spark, pts.size,
-        cs.x * cs.y * cs.z * dtb))
-      .flatMap { case (gx, gy, gz) =>
-        val bo = if (be) java.nio.ByteOrder.BIG_ENDIAN
-          else java.nio.ByteOrder.LITTLE_ENDIAN
-        val parts = lead ++ Seq(gz.toString, gy.toString, gx.toString)
-        val p = Paths.get(dirStr, parts.mkString(sep))
-        val vox =
-          if (!Files.exists(p)) Array.fill((cs.x * cs.y * cs.z).toInt)(fill)
-          else Codec.decodeRawToLongs(unpack(meta, Files.readAllBytes(p)),
-            dtb, bo)
-        // a corrupt object decoding to the wrong voxel count must fail
-        // here, not as a raw index error in the clip loop below
-        require(vox.length == cs.x * cs.y * cs.z,
-          s"corrupt zarr2 chunk $p: ${vox.length} voxels != chunk shape $cs")
-        val lo = Vec3(gx * cs.x, gy * cs.y, gz * cs.z)
-        val out = scala.collection.mutable.ArrayBuffer
-          .empty[(Long, Long, Long, Long)]
-        var z = math.max(lo.z, clip.minpt.z)
-        while (z < math.min(lo.z + cs.z, clip.maxpt.z)) {
-          var y = math.max(lo.y, clip.minpt.y)
-          while (y < math.min(lo.y + cs.y, clip.maxpt.y)) {
-            var x = math.max(lo.x, clip.minpt.x)
-            while (x < math.min(lo.x + cs.x, clip.maxpt.x)) {
-              out += ((x, y, z,
-                vox(((x - lo.x) + cs.x * ((y - lo.y) + cs.y * (z - lo.z))).toInt)))
-              x += 1
-            }
-            y += 1
-          }
-          z += 1
-        }
-        out
-      }.toDF("x", "y", "z", "label")
+    val sep = o.meta.separator
+    // C order of (t=1, c=1, z, y, x) is x-fastest: no transpose
+    cutoutChunks(spark, chunkBase, o.meta, bbox, transpose = false,
+      g => (lead ++ Seq(g.z, g.y, g.x).map(_.toString)).mkString(sep))
   }
 
   /** S18 zarr2 cutout (same plan shape as zarr3). */
   def cutoutVoxels(spark: SparkSession, dir: String, bbox: Bbox): DataFrame = {
     val m = readMeta(dir)
+    val sep = m.separator
+    cutoutChunks(spark, dir, m, bbox, transpose = m.order == "C",
+      g => s"${g.x}$sep${g.y}$sep${g.z}")
+  }
+
+  /** Both zarr2 cutouts: the chunk named `key(g)` under `dir` decodes
+    * through the compressor and the dtype's byte order, C-order bytes
+    * transposed to F when `transpose`; an absent key is a fill_value
+    * chunk (zarr v2 semantics; the reference's fill_missing path,
+    * zarr2/image.py:55-75). Chunks are full-size, edge chunks padded.
+    */
+  private def cutoutChunks(spark: SparkSession, dir: String, m: Zarr2Meta,
+      bbox: Bbox, transpose: Boolean, key: Vec3 => String): DataFrame = {
     val cs = m.chunkShape
     val dtb = m.dtypeBytes
-    val meta = m
-    val isF = m.order == "F"
-    val sep = m.separator
+    val fill = m.fillValue
+    // ByteOrder is not Serializable — ship a flag, rehydrate per chunk
     val be = m.byteOrder == java.nio.ByteOrder.BIG_ENDIAN
     val bounds = Bbox(Vec3(0, 0, 0), m.shape)
-    val pts = Geom.gridpoints(bbox, bounds, cs)
-    val clip = bbox.intersection(bounds)
-    val dirStr = dir
-    val fill = m.fillValue
-    import spark.implicits._
-    spark.createDataset(pts.map(g => (g.x, g.y, g.z)))
-      // bytes-aware split sizing (guide §6; shared rule in ScanSizing)
-      .repartition(ScanSizing.partitions(spark, pts.size,
-        cs.x * cs.y * cs.z * dtb))
-      .flatMap { case (gx, gy, gz) =>
-        val bo = if (be) java.nio.ByteOrder.BIG_ENDIAN
-          else java.nio.ByteOrder.LITTLE_ENDIAN
-        val p = Paths.get(dirStr, s"$gx$sep$gy$sep$gz")
-        // absent chunk key = fill_value chunk (zarr v2 semantics; the
-        // reference's fill_missing path, zarr2/image.py:55-75)
-        val vox =
-          if (!Files.exists(p)) Array.fill((cs.x * cs.y * cs.z).toInt)(fill)
-          else {
-            val raw0 = Files.readAllBytes(p)
-            val raw = unpack(meta, raw0)
-            if (isF) Codec.decodeRawToLongs(raw, dtb, bo)
-            else Zarr3IO.decodeChunkToF(raw, cs, dtb, bo)
-          }
-        // decodeChunkToF validates the count; the F path must too — a
-        // corrupt object fails loudly, not as a raw index error below
-        require(vox.length == cs.x * cs.y * cs.z,
-          s"corrupt zarr2 chunk $p: ${vox.length} voxels != chunk shape $cs")
-        val lo = Vec3(gx * cs.x, gy * cs.y, gz * cs.z)
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-        var z = math.max(lo.z, clip.minpt.z)
-        while (z < math.min(lo.z + cs.z, clip.maxpt.z)) {
-          var y = math.max(lo.y, clip.minpt.y)
-          while (y < math.min(lo.y + cs.y, clip.maxpt.y)) {
-            var x = math.max(lo.x, clip.minpt.x)
-            while (x < math.min(lo.x + cs.x, clip.maxpt.x)) {
-              out += ((x, y, z,
-                vox(((x - lo.x) + cs.x * ((y - lo.y) + cs.y * (z - lo.z))).toInt)))
-              x += 1
-            }
-            y += 1
-          }
-          z += 1
+    ChunkGrid.cutout(spark, Geom.gridpoints(bbox, bounds, cs), bbox,
+        cs.x * cs.y * cs.z * dtb) { g =>
+      val bo = if (be) java.nio.ByteOrder.BIG_ENDIAN
+        else java.nio.ByteOrder.LITTLE_ENDIAN
+      val p = Paths.get(dir, key(g))
+      val vox =
+        if (!Files.exists(p)) Array.fill((cs.x * cs.y * cs.z).toInt)(fill)
+        else {
+          val raw = unpack(m, Files.readAllBytes(p))
+          if (transpose) Zarr3IO.decodeChunkToF(raw, cs, dtb, bo)
+          else Codec.decodeRawToLongs(raw, dtb, bo)
         }
-        out
-      }.toDF("x", "y", "z", "label")
+      Iterator.single(ChunkGrid.Decoded(Geom.chunkBbox(g, bounds, cs), cs, vox))
+    }
   }
 }

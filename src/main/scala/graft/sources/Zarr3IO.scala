@@ -665,30 +665,6 @@ object Zarr3IO {
     if (m.zyx) Seq(gz.toString, gy.toString, gx.toString)
     else Seq(gx.toString, gy.toString, gz.toString)
 
-  /** Clip a decoded F-order block at origin `lo` of shape `bs` to
-    * `clip` and emit (x, y, z, label) rows — the shared tail of every
-    * cutout path.
-    */
-  private def emitClipped(vox: Array[Long], lo: Vec3, bs: Vec3,
-      clip: Bbox): Seq[(Long, Long, Long, Long)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-    var z = math.max(lo.z, clip.minpt.z)
-    while (z < math.min(lo.z + bs.z, clip.maxpt.z)) {
-      var y = math.max(lo.y, clip.minpt.y)
-      while (y < math.min(lo.y + bs.y, clip.maxpt.y)) {
-        var x = math.max(lo.x, clip.minpt.x)
-        while (x < math.min(lo.x + bs.x, clip.maxpt.x)) {
-          out += ((x, y, z,
-            vox(((x - lo.x) + bs.x * ((y - lo.y) + bs.y * (z - lo.z))).toInt)))
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
-    out.toSeq
-  }
-
   /** Unsharded cutout core: enumerate the pruned grid at planning
     * time, read + unpack chunk objects in executor tasks, slice out
     * frame `frameSlot` (lead t/c axes; 0 and whole-chunk for 3-D),
@@ -704,38 +680,31 @@ object Zarr3IO {
     val frameBytes = (cs.x * cs.y * cs.z).toInt * dtb
     val fOff = (frameSlot * frameBytes).toInt
     val bounds = Bbox(Vec3(0, 0, 0), m.shape)
-    val pts = Geom.gridpoints(bbox, bounds, cs)
-    val dirStr = dir
-    val clip = bbox.intersection(bounds)
     val fill = m.fillValue
     val keyParts = prefix.map(_.toString)
-    import spark.implicits._
-    spark.createDataset(pts.map(g => (g.x, g.y, g.z)))
-      // bytes-aware split sizing (guide §6; shared rule in ScanSizing)
-      .repartition(ScanSizing.partitions(spark, pts.size,
-        cs.x * cs.y * cs.z * dtb))
-      .flatMap { case (gx, gy, gz) =>
-        var p = Paths.get(dirStr, "c")
-        (keyParts ++ spatialKey(m, gx, gy, gz)).foreach(k => p = p.resolve(k))
-        // zarr defines an absent chunk key as a fill_value-filled chunk
-        // (the reference raises EmptyVolumeException unless
-        // fill_missing; zarr3/image.py:49-139)
-        val vox =
-          if (!Files.exists(p)) Array.fill((cs.x * cs.y * cs.z).toInt)(fill)
-          else {
-            val raw = unpack(m, Files.readAllBytes(p))
-            // a short object would silently zero-pad via copyOfRange —
-            // fail loudly instead: zarr chunks are always full-size
-            require(raw.length >= fOff + frameBytes,
-              s"truncated zarr chunk $p: ${raw.length} bytes, " +
-                s"frame needs [$fOff, ${fOff + frameBytes})")
-            val frame =
-              if (fOff == 0 && raw.length == frameBytes) raw
-              else java.util.Arrays.copyOfRange(raw, fOff, fOff + frameBytes)
-            decodeFrameToF(m, frame, cs, dtb)
-          }
-        emitClipped(vox, Vec3(gx * cs.x, gy * cs.y, gz * cs.z), cs, clip)
-      }.toDF("x", "y", "z", "label")
+    ChunkGrid.cutout(spark, Geom.gridpoints(bbox, bounds, cs), bbox,
+        cs.x * cs.y * cs.z * dtb) { g =>
+      var p = Paths.get(dir, "c")
+      (keyParts ++ spatialKey(m, g.x, g.y, g.z)).foreach(k => p = p.resolve(k))
+      // zarr defines an absent chunk key as a fill_value-filled chunk
+      // (the reference raises EmptyVolumeException unless
+      // fill_missing; zarr3/image.py:49-139)
+      val vox =
+        if (!Files.exists(p)) Array.fill((cs.x * cs.y * cs.z).toInt)(fill)
+        else {
+          val raw = unpack(m, Files.readAllBytes(p))
+          // a short object would silently zero-pad via copyOfRange —
+          // fail loudly instead: zarr chunks are always full-size
+          require(raw.length >= fOff + frameBytes,
+            s"truncated zarr chunk $p: ${raw.length} bytes, " +
+              s"frame needs [$fOff, ${fOff + frameBytes})")
+          val frame =
+            if (fOff == 0 && raw.length == frameBytes) raw
+            else java.util.Arrays.copyOfRange(raw, fOff, fOff + frameBytes)
+          decodeFrameToF(m, frame, cs, dtb)
+        }
+      Iterator.single(ChunkGrid.Decoded(Geom.chunkBbox(g, bounds, cs), cs, vox))
+    }
   }
 
   /** Cutout one xyz bbox at a single (t, c) point of the lead axes
@@ -788,7 +757,7 @@ object Zarr3IO {
     else cutoutUnsharded(spark, dir, m, bbox, Seq.empty, 0L)
   }
 
-  /** Sharded cutout: one task per NEEDED shard (planning-time grid
+  /** Sharded cutout: one key per NEEDED shard (planning-time grid
     * pruning), each reading the trailing index once (crc-checked) and
     * then range-reading only the inner chunks that intersect the
     * request — never the whole shard object. Absent shard files and
@@ -800,57 +769,35 @@ object Zarr3IO {
     val inner = m.innerChunkShape.get
     val ig = m.innerGrid
     val cs = m.chunkShape
-    val dtb = m.dtypeBytes
-    val fill = m.fillValue
     val bounds = Bbox(Vec3(0, 0, 0), m.shape)
     val clip = bbox.intersection(bounds)
-    val shardPts = Geom.gridpoints(bbox, bounds, cs)
-    val dirStr = dir
-    import spark.implicits._
-    spark.createDataset(shardPts.map(g => (g.x, g.y, g.z)))
-      // bytes-aware split sizing (guide §6); the full-shard volume
-      // OVERestimates the ranged read, which only costs parallelism
-      .repartition(ScanSizing.partitions(spark, shardPts.size,
-        cs.x * cs.y * cs.z * dtb))
-      .flatMap { case (sx, sy, sz) =>
-        val file = Paths.get(dirStr, "c", sx.toString, sy.toString,
-          sz.toString)
-        val shardLo = Vec3(sx * cs.x, sy * cs.y, sz * cs.z)
-        val index: Option[Array[(Long, Long)]] =
-          if (Files.exists(file)) Some(readShardIndex(file, m)) else None
-        // absent shard / Missing slot -> fill_value chunk (allocated
-        // once per shard task, shared across its elided inner chunks)
-        lazy val fillChunk = Array.fill((inner.x * inner.y * inner.z).toInt)(fill)
-        val out = scala.collection.mutable.ArrayBuffer
-          .empty[(Long, Long, Long, Long)]
-        var cx = 0L
-        while (cx < ig.x) {
-          var cy = 0L
-          while (cy < ig.y) {
-            var cz = 0L
-            while (cz < ig.z) {
-              val lo = Vec3(shardLo.x + cx * inner.x,
-                shardLo.y + cy * inner.y, shardLo.z + cz * inner.z)
-              val hit = Bbox(lo, lo + inner).intersection(clip)
-              if (hit.volume > 0) {
-                val vox = index match {
-                  case None => fillChunk // whole shard absent
-                  case Some(idx) =>
-                    val (off, len) = idx(innerSlot(Vec3(cx, cy, cz), ig))
-                    if (off == Missing) fillChunk
-                    else decodeChunkToF(unpack(m, readRange(file, off, len)),
-                      inner, dtb)
-                }
-                out ++= emitClipped(vox, lo, inner, clip)
-              }
-              cz += 1
-            }
-            cy += 1
-          }
-          cx += 1
-        }
-        out
-      }.toDF("x", "y", "z", "label")
+    // the full-shard volume OVERestimates the ranged read, which only
+    // costs parallelism
+    ChunkGrid.cutout(spark, Geom.gridpoints(bbox, bounds, cs), bbox,
+        cs.x * cs.y * cs.z * m.dtypeBytes) { s =>
+      val file = Paths.get(dir, "c", s.x.toString, s.y.toString, s.z.toString)
+      val index: Option[Array[(Long, Long)]] =
+        if (Files.exists(file)) Some(readShardIndex(file, m)) else None
+      // absent shard / Missing slot -> fill_value chunk (allocated once
+      // per shard, shared across its elided inner chunks)
+      lazy val fillChunk =
+        Array.fill((inner.x * inner.y * inner.z).toInt)(m.fillValue)
+      for {
+        cx <- (0L until ig.x).iterator
+        cy <- (0L until ig.y).iterator
+        cz <- (0L until ig.z).iterator
+        lo = s * cs + Vec3(cx, cy, cz) * inner
+        cell = Bbox(lo, lo + inner).intersection(bounds)
+        if cell.intersects(clip)
+      } yield ChunkGrid.Decoded(cell, inner, index match {
+        case None => fillChunk // whole shard absent
+        case Some(idx) =>
+          val (off, len) = idx(innerSlot(Vec3(cx, cy, cz), ig))
+          if (off == Missing) fillChunk
+          else decodeChunkToF(unpack(m, readRange(file, off, len)),
+            inner, m.dtypeBytes)
+      })
+    }
   }
 
   // ---- OME-NGFF 0.5 multiscale GROUP (zarr v3 group node) ----

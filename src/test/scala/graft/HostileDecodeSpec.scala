@@ -336,6 +336,49 @@ class HostileDecodeSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.stop()
   }
 
+  // ---- n5 header dims vs the block's cell (through the Spark path) --
+
+  /** An 8x4x4 uint16 layer of 4^3 blocks whose block (0,0,0) header
+    * claims `dims0`; every failure must be the declared type, never
+    * duplicated (header too big) or silently dropped (too small) rows.
+    */
+  private def n5HeaderDimsCase(dims0: Vec3): Unit = {
+    val spark = SparkSession.builder().master("local[2]")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    try {
+      val dir = Files.createTempDirectory("graft_hostile_n5dims").toString
+      N5IO.writeMeta(dir, N5IO.N5Meta(dimensions = Vec3(8, 4, 4),
+        blockSize = Vec3(4, 4, 4), dataType = "uint16", compression = "raw"))
+      def put(gx: Int, dims: Vec3): Unit = {
+        val p = Paths.get(dir, "s0", gx.toString, "0")
+        Files.createDirectories(p)
+        Files.write(p.resolve("0"), N5IO.encodeBlock(
+          Array.tabulate((dims.x * dims.y * dims.z).toInt)(_.toLong),
+          dims, 2, "raw"))
+      }
+      put(0, dims0)
+      put(1, Vec3(4, 4, 4))
+      val e = intercept[Exception] {
+        N5IO.cutoutVoxels(spark, dir,
+          Bbox(Vec3(0, 0, 0), Vec3(8, 4, 4))).collect()
+      }
+      def causes(t: Throwable): Seq[Throwable] =
+        if (t == null) Seq.empty else t +: causes(t.getCause)
+      assert(causes(e).exists(_.isInstanceOf[IllegalArgumentException]),
+        s"expected IllegalArgumentException in the cause chain, got $e")
+    } finally spark.stop()
+  }
+
+  test("n5: a block header wider than blockSize fails, not duplicated rows") {
+    n5HeaderDimsCase(Vec3(8, 4, 4))
+  }
+
+  test("n5: a block header narrower than its cell fails, not dropped rows") {
+    n5HeaderDimsCase(Vec3(2, 4, 4))
+  }
+
   // ---- overflow/empty-input rails (r18 advisor regressions) ---------
 
   test("zstd: zero-length input fails as the declared type, not AIOOBE") {
